@@ -4,15 +4,22 @@ UDFs — designed so each stage is a single shuffle:
 
   exact         hash-groupBy on a normalized fingerprint (1 shuffle)
   latest-wins   the reference's W1 window dedup (ETL.sql:95-107)
-  minhash+LSH   shingle→minhash signature (1 shuffle) → band buckets
+  minhash+LSH   shingle→minhash signature (row-local, no shuffle; or
+                1 shuffle from a (doc, g) shingle set) → band buckets
                 (1 shuffle) → candidate pairs → exact-Jaccard verify
   simhash       per-token bit votes (1 shuffle), near-pairs by hamming
 
+Row-local builders (:func:`shingle_arrays`, :func:`minhash_signatures`,
+the incremental probe) treat each input row as one document, so ids
+must be unique; the (doc, g) shingle-set path (:func:`shingle_set`,
+:func:`minhash_signatures_from_shingles`) merges rows sharing an id.
+
 Scale notes (100 TB): the LSH band join is the only all-pairs-risk step;
-band buckets bound it to near-duplicate groups. Exact verification joins
-only the candidate pairs back to shingle sets (semi-join pruning). The
-hot-key hazard is a degenerate band (e.g. all-empty docs) — normalize
-drops empties up front.
+band buckets bound it to near-duplicate groups. Exact verification
+touches only the candidate pairs: the batch path joins them back to the
+shingle sets, the incremental probe intersects the pair's two shingle
+arrays. The hot-key hazard is a degenerate band (e.g. all-empty docs) —
+normalize drops empties up front.
 """
 
 from __future__ import annotations
@@ -86,11 +93,35 @@ def shingle_set(df: DataFrame, id_col: str, text_col: str, k: int = 2) -> DataFr
     toks = df.select(
         F.col(id_col).alias("doc"), F.expr(s_tokens(text_col)).alias("_toks")
     )
-    shingles = (
-        f"transform(sequence(1, greatest(size(_toks) - {k - 1}, 1)),"
-        f" i -> array_join(slice(_toks, i, {k}), ' '))"
+    return toks.select("doc", F.explode(F.expr(_shingles_of("_toks", k))).alias("g")).distinct()
+
+
+def _shingles_of(toks: str, k: int) -> str:
+    return (
+        f"transform(sequence(1, greatest(size({toks}) - {k - 1}, 1)),"
+        f" i -> array_join(slice({toks}, i, {k}), ' '))"
     )
-    return toks.select("doc", F.explode(F.expr(shingles)).alias("g")).distinct()
+
+
+def _with_shingle_array(df: DataFrame, text_col: str, k: int, sh: str) -> DataFrame:
+    """``df`` with ``text_col`` replaced by its distinct k-word shingle
+    array ``sh``; tokens are materialized once per row first (see
+    :func:`shingle_set`)."""
+    keep = [c for c in df.columns if c != text_col]
+    toks = df.select(*keep, F.expr(s_tokens(text_col)).alias("_toks"))
+    return toks.select(*keep, F.array_distinct(F.expr(_shingles_of("_toks", k))).alias(sh))
+
+
+def shingle_arrays(df: DataFrame, id_col: str, text_col: str, k: int = 2) -> DataFrame:
+    """Row-local twin of :func:`shingle_set`: (doc, sh), one row per
+    input row, ``sh`` = array_distinct of the row's k-word shingles
+    (same tokenization). No explode, no shuffle — the arrays ride along
+    with their document through any later join.
+
+    Precondition: ``id_col`` is unique. :func:`shingle_set`'s distinct
+    merged rows sharing an id; here each row stays its own document.
+    """
+    return _with_shingle_array(df.select(F.col(id_col).alias("doc"), text_col), text_col, k, "sh")
 
 
 def prefix_filtered_candidates(sh: DataFrame, threshold: float) -> DataFrame:
@@ -208,11 +239,29 @@ def minhash_signatures_from_shingles(shingles: DataFrame, n_hashes: int = 32) ->
     return h.groupBy("doc").agg(*aggs)
 
 
+def _with_minhash_signature(arrays: DataFrame, n_hashes: int) -> DataFrame:
+    """Append m0..m{n-1} to a frame holding a shingle-array column
+    ``sh`` (:func:`shingle_arrays`), every other column kept. Row-local:
+    the 28-bit shingle hashes are computed once per row into an array,
+    then m_i = array_min over its affine permutation — the same values
+    as :func:`minhash_signatures_from_shingles`'s per-doc min, with no
+    explode and no groupBy(doc)."""
+    hashed = arrays.withColumn("_h", F.expr(f"transform(sh, g -> {s_md5_long('g', 7)})"))
+    return hashed.select(
+        *arrays.columns,
+        *[
+            F.expr(f"array_min(transform(_h, x -> ({a} * x + {b}) % {MINHASH_PRIME}))").alias(f"m{i}")
+            for i, (a, b) in enumerate(minhash_coefficients(n_hashes))
+        ],
+    )
+
+
 def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str, k: int = 2, n_hashes: int = 32
 ) -> DataFrame:
-    """MinHash signature per doc: columns m0..m{n-1}."""
-    return minhash_signatures_from_shingles(shingle_set(df, id_col, text_col, k), n_hashes)
+    """MinHash signature per doc: columns m0..m{n-1}. Row-local — one
+    output row per input row, so ``id_col`` must be unique."""
+    return _with_minhash_signature(shingle_arrays(df, id_col, text_col, k), n_hashes).drop("sh")
 
 
 def band_rows(signatures: DataFrame, bands: int = 16) -> DataFrame:
@@ -320,7 +369,6 @@ def incremental_minhash_near_dups(
     k: int = 2, n_hashes: int = 32, bands: int = 16, threshold: float = 0.5,
     corpus_bands: DataFrame | None = None,
     corpus_sigs: DataFrame | None = None,
-    shingles: DataFrame | None = None,
 ) -> DataFrame:
     """NEAR-dup twin of the incremental exact-hash batch dedup: LSH-probe
     an arriving batch against a STANDING corpus whose band signatures are
@@ -337,38 +385,27 @@ def incremental_minhash_near_dups(
     when omitted both are derived in-query (the from-scratch twin the
     equivalence tests compare against). The corpus side of the candidate
     join is then a pure columnar SCAN — no re-shingling, no re-hashing
-    of corpus text; only candidate-matched corpus docs are re-shingled
-    for the exact verify (candidate-bounded by construction).
+    of corpus text.
 
-    Scale shape: batch shingles/signatures are |batch|-sized; the
-    candidate join keys on (band_idx, bh) — the persisted corpus table
-    would be bucketed on exactly that key at 100 TB, making the probe
-    exchange-free on the corpus side; verify joins touch only candidate
-    pairs.
+    Plan (row-local — no groupBy(doc), no shingle explode): each batch
+    row becomes (doc, sh, m0..m{n-1}) in one projection chain
+    (:func:`shingle_arrays`, :func:`_with_minhash_signature`); its band
+    rows join the corpus bands on (band_idx, bh); the distinct candidate
+    pairs join the batch's (sig, sh) and the corpus signatures for the
+    signature-agreement prefilter; the surviving pairs join the corpus
+    text and verify exactly by array intersection, |A∩B| / (|A| + |B| −
+    |A∩B|). Only pruned pairs' corpus documents are ever tokenized.
+
+    Precondition: ids are unique on each side — every row is one
+    document (a duplicated id would be probed as two documents).
     """
-
-    def _sig_arr(sigs: DataFrame) -> DataFrame:
-        return sigs.select(
-            "doc", F.array(*[F.col(f"m{i}") for i in range(n_hashes)]).alias("sig")
-        )
-
-    b_ids = batch.select(F.col(id_col).alias("doc"))
-    # semi-join (no forced broadcast): a "batch" can itself be large at
-    # ingest scale — AQE broadcasts the id set when it is small enough
-    # and falls back to a co-partitioned semi join when it is not
-    bsh = (
-        shingles.join(b_ids, "doc", "left_semi")
-        if shingles is not None
-        else shingle_set(batch, id_col, text_col, k)
-    )
-    bsigs = minhash_signatures_from_shingles(bsh, n_hashes)
-    bbands = band_rows(bsigs, bands)
+    bsig = _with_minhash_signature(shingle_arrays(batch, id_col, text_col, k), n_hashes)
+    m_cols = [F.col(f"m{i}") for i in range(n_hashes)]
+    bbands = band_rows(bsig.select("doc", *m_cols), bands)
     if corpus_bands is None or corpus_sigs is None:
-        csigs_cols = minhash_signatures_from_shingles(
-            shingle_set(corpus, id_col, text_col, k), n_hashes
-        )
-        corpus_bands = band_rows(csigs_cols, bands)
-        corpus_sigs = _sig_arr(csigs_cols)
+        csig = minhash_signatures(corpus, id_col, text_col, k, n_hashes)
+        corpus_bands = band_rows(csig, bands)
+        corpus_sigs = csig.select("doc", F.array(*m_cols).alias("sig"))
     cands = (
         bbands.select(F.col("doc").alias("doc_a"), "band_idx", "bh")
         .join(
@@ -380,7 +417,10 @@ def incremental_minhash_near_dups(
     )
     est = (
         cands.join(
-            _sig_arr(bsigs).select(F.col("doc").alias("doc_a"), F.col("sig").alias("sig_a")),
+            bsig.select(
+                F.col("doc").alias("doc_a"), F.array(*m_cols).alias("sig_a"),
+                F.col("sh").alias("sh_a"),
+            ),
             "doc_a",
         )
         .join(
@@ -394,20 +434,28 @@ def incremental_minhash_near_dups(
         )
     )
     margin = 2.0 * (threshold * (1.0 - threshold) / n_hashes) ** 0.5
-    pruned = est.filter(F.col("est_j") >= threshold - margin).select("doc_a", "doc_b")
-    if shingles is not None:
-        ver_sh = shingles
-    else:
-        cand_c = corpus.join(
-            pruned.select(F.col("doc_b").alias(id_col)).distinct(),
-            id_col,
-            "left_semi",
-        )
-        ver_sh = bsh.unionByName(shingle_set(cand_c, id_col, text_col, k))
-    return jaccard_pairs(
-        batch, id_col, text_col, k, threshold,
-        candidates=pruned, shingles=ver_sh,
+    pruned = est.filter(F.col("est_j") >= threshold - margin).select("doc_a", "doc_b", "sh_a")
+    # corpus text joins the pruned pairs BEFORE tokenizing, so only
+    # candidate corpus documents are shingled
+    verify = _with_shingle_array(
+        pruned.join(
+            corpus.select(F.col(id_col).alias("doc_b"), F.col(text_col).alias("_text_b")),
+            "doc_b",
+        ),
+        "_text_b", k, "sh_b",
     )
+    # array_compact: a null text's lone null shingle must not intersect
+    # another's (the shingle-set join never matched null = null)
+    inter = verify.select(
+        "doc_a", "doc_b", "sh_a", "sh_b",
+        F.size(F.array_intersect(F.array_compact("sh_a"), "sh_b")).alias("inter"),
+    )
+    return inter.select(
+        "doc_a",
+        "doc_b",
+        (F.col("inter").cast("double") / (F.size("sh_a") + F.size("sh_b") - F.col("inter")))
+        .alias("jaccard"),
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFrame:

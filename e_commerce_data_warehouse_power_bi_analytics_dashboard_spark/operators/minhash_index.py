@@ -44,7 +44,7 @@ from ..functions.text import (
     o_md5_long, o_md5_long_at, s_md5_long, s_md5_long_at,
 )
 from ..sources.tpch import read_table
-from .dedup import band_rows, minhash_signatures_from_shingles, shingle_set
+from .dedup import band_rows, minhash_signatures
 
 _REPO_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -146,37 +146,19 @@ def build_minhash_index(spark: SparkSession, sf_dir: str) -> str:
         _BUILT.add(key)
         return root
 
-    sh = shingle_set(corpus_docs(spark, sf_dir), "doc_id", "text", SHINGLE_K)
-    sigs = minhash_signatures_from_shingles(sh, N_HASHES)
-    # one derivation feeds both artifacts: persist the m0..m31 frame
-    # first, then band it from the written copy (avoids recomputing the
-    # 32-permutation aggregation for the band table)
+    # one derivation feeds both artifacts: persist the signatures first,
+    # then band them from the written copy (avoids recomputing the 32
+    # permutations for the band table)
     sig_path = os.path.join(root, "sigs")
-    sigs.select(
-        "doc", F.array(*[F.col(f"m{i}") for i in range(N_HASHES)]).alias("sig")
-    ).write.mode("overwrite").parquet(sig_path)
-    stored = spark.read.parquet(sig_path).select(
-        "doc", *[F.col("sig")[i].alias(f"m{i}") for i in range(N_HASHES)]
-    )
-    bands = band_rows(stored, BANDS)
+    _sig_array_frame(corpus_docs(spark, sf_dir)).write.mode("overwrite").parquet(sig_path)
+    bands = _bands_from_stored(spark, sig_path)
     with open(_bands_ddl_path(root), "w") as fh:
         fh.write(", ".join(
             f"{f.name} {f.dataType.simpleString()}" for f in bands.schema.fields
         ))
     tbl = bands_table_name(sf_dir)
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    (
-        # pre-shuffle on the bucket keys with the bucket count: Spark's
-        # bucket id and its shuffle hash are the same murmur3, so each
-        # write task holds exactly one bucket → one sorted file per
-        # bucket (the layout the sorted bucketed scan needs)
-        bands.repartition(N_BUCKETS, "band_idx", "bh")
-        .write.bucketBy(N_BUCKETS, "band_idx", "bh")
-        .sortBy("band_idx", "bh")
-        .option("path", os.path.join(root, "bands"))
-        .mode("overwrite")
-        .saveAsTable(tbl)
-    )
+    _bucketed_band_write(bands, tbl, os.path.join(root, "bands"), "overwrite")
     with open(_marker(root), "w") as fh:
         fh.write("ok\n")
     _BUILT.add(key)
@@ -265,9 +247,9 @@ def incr_bands_table_name(sf_dir: str) -> str:
 
 def _sig_array_frame(docs: DataFrame) -> DataFrame:
     """(doc, sig long[32]) for ``docs`` — the one deterministic encode
-    path shared by base build and every fold."""
-    sh = shingle_set(docs, "doc_id", "text", SHINGLE_K)
-    sigs = minhash_signatures_from_shingles(sh, N_HASHES)
+    path shared by base build and every fold. Row-local (no shuffle):
+    one signature per input row, so ``doc_id`` must be unique."""
+    sigs = minhash_signatures(docs, "doc_id", "text", SHINGLE_K, N_HASHES)
     return sigs.select(
         "doc", F.array(*[F.col(f"m{i}") for i in range(N_HASHES)]).alias("sig")
     )
@@ -286,9 +268,11 @@ def _bands_from_stored(spark: SparkSession, sig_path: str) -> DataFrame:
 
 
 def _bucketed_band_write(bands: DataFrame, tbl: str, path: str, mode: str) -> None:
-    """Bucket-aligned write of band rows (pre-shuffled on the bucket
-    keys so each task holds exactly one bucket — one new file per
-    bucket per write)."""
+    """Bucket-aligned write of band rows, pre-shuffled on the bucket
+    keys with the bucket count: Spark's bucket id and its shuffle hash
+    are the same murmur3, so each write task holds exactly one bucket —
+    one new sorted file per bucket per write (the layout the sorted
+    bucketed scan needs)."""
     (
         bands.repartition(N_BUCKETS, "band_idx", "bh")
         .write.bucketBy(N_BUCKETS, "band_idx", "bh")

@@ -353,8 +353,10 @@ def dedup_incremental_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(pure columnar scan of (doc, band_idx, bh), bucketed on the "
         "band key at 100 TB for an exchange-free probe), and only "
         "candidate-matched corpus docs are touched by the exact-Jaccard "
-        "verify. Oracle re-derives the batch×corpus near-dup pairs "
-        "from scratch — exact given LSH recall (>1-1e-4 at τ=0.5 for "
+        "verify. Row-local: each batch document carries its shingle "
+        "array and signature (no shuffle builds them), and the verify "
+        "intersects the two docs' shingle arrays per pruned pair. "
+        "Oracle re-derives the batch×corpus near-dup pairs from scratch — exact given LSH recall (>1-1e-4 at τ=0.5 for "
         "16×2 banding). operators/dedup.py::incremental_minhash_near_dups.",
 )
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -365,7 +367,6 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=2, n_hashes=32, bands=16, threshold=0.5,
         corpus_bands=MI.read_artifact(spark, sf_dir, "bands"),
         corpus_sigs=MI.read_artifact(spark, sf_dir, "sigs"),
-        shingles=_doc_shingles(spark, sf_dir),
     )
 
 

@@ -14,7 +14,10 @@ from e_commerce_data_warehouse_power_bi_analytics_dashboard_spark.operators.dedu
     exact_dedup_groups,
     jaccard_pairs,
     latest_wins,
+    minhash_signatures,
+    minhash_signatures_from_shingles,
     prefix_filtered_candidates,
+    shingle_set,
 )
 
 _KEYS = st.sampled_from(["k1", "k2", "k3", "k4"])
@@ -67,6 +70,42 @@ def test_exact_dedup_partitions_input(spark, texts):
     keeps = [r["keep_doc_id"] for r in groups]
     assert len(set(keeps)) == len(keeps)
     assert all(0 <= k < len(texts) for k in keeps)
+
+
+# ---------------------------------------------------------------------------
+# row-local MinHash: same signatures as the (doc, g) shingle-set path
+# ---------------------------------------------------------------------------
+
+#: empty, punctuation-only, one-word and one-repeated-bigram documents,
+#: plus a null text
+_EDGE_TEXTS = st.sampled_from(["", "?!.,;: --", "Word", "red fox red fox red fox", None])
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    texts=st.lists(
+        st.one_of(_EDGE_TEXTS, st.text(alphabet="ab C.!  ", max_size=20)),
+        min_size=1, max_size=12,
+    )
+)
+def test_row_local_signatures_equal_shingle_set_signatures(spark, texts):
+    """minhash_signatures (row-local: array_min over each row's shingle
+    hash array) == minhash_signatures_from_shingles(shingle_set(...))
+    (explode → distinct → groupBy(doc) min), on every m_i of every doc."""
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+
+    def sigs(frame):
+        return {
+            r["doc"]: tuple(r[f"m{i}"] for i in range(32))
+            for r in frame.collect()
+        }
+
+    got = sigs(minhash_signatures(df, "doc_id", "text", k=2, n_hashes=32))
+    want = sigs(
+        minhash_signatures_from_shingles(shingle_set(df, "doc_id", "text", 2), 32)
+    )
+    assert got == want
+    assert set(got) == set(range(len(texts)))
 
 
 # ---------------------------------------------------------------------------

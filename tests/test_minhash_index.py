@@ -125,6 +125,64 @@ def test_bucketed_band_probe_corpus_side_is_exchange_free(spark):
     assert "BroadcastExchange" not in plan
 
 
+def _served_probe(spark):
+    return D.incremental_minhash_near_dups(
+        MI.batch_docs(spark, SF_SMOKE), MI.corpus_docs(spark, SF_SMOKE),
+        "doc_id", "text",
+        corpus_bands=MI.read_artifact(spark, SF_SMOKE, "bands"),
+        corpus_sigs=MI.read_artifact(spark, SF_SMOKE, "sigs"),
+    )
+
+
+def _py_shingles(text, k=2):
+    """The engine's 2-word shingle set (functions/text.py::s_tokens
+    normalization) in plain Python."""
+    toks = re.sub(" +", " ", re.sub("[^a-z0-9 ]", "", text.lower())).strip(" ").split(" ")
+    return {" ".join(toks[i:i + k]) for i in range(max(len(toks) - k + 1, 1))}
+
+
+def test_probe_equals_brute_force_python_jaccard(spark):
+    """The served probe returns exactly the (batch × corpus) pairs with
+    Jaccard ≥ 0.5, and the same jaccard doubles, as a brute-force
+    Python-set Jaccard over every pair."""
+    def sets(df):
+        return {r["doc_id"]: _py_shingles(r["text"]) for r in df.collect()}
+
+    batch = sets(MI.batch_docs(spark, SF_SMOKE))
+    corpus = sets(MI.corpus_docs(spark, SF_SMOKE))
+    want = set()
+    for a, sa in batch.items():
+        for b, sb in corpus.items():
+            inter = len(sa & sb)
+            j = inter / (len(sa) + len(sb) - inter)
+            if j >= 0.5:
+                want.add((a, b, j))
+    assert want  # non-vacuous: the smoke batch has near-dups
+    assert set(map(tuple, _served_probe(spark).collect())) == want
+
+
+def test_probe_plan_is_row_local_and_job_bounded(spark):
+    """Plan-shape guard: the probe builds shingles and signatures per
+    row — no aggregate keyed on doc, no shingle explode — and one probe
+    runs in at most 10 Spark jobs."""
+    served = _served_probe(spark)
+    sc = spark.sparkContext
+    group = "minhash-probe-job-count"
+    sc.setJobGroup(group, "incremental minhash probe")
+    try:
+        assert served.collect()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    plan = served._jdf.queryExecution().executedPlan().toString()
+    assert not re.search(r"HashAggregate\(keys=\[doc#", plan), plan
+    generates = [ln for ln in plan.splitlines() if "Generate explode" in ln]
+    assert generates  # the band explode is still there
+    assert not [ln for ln in generates if "array_join" in ln], plan
+    assert 0 < len(jobs) <= 10, sorted(jobs)
+
+
 # ----------------------------------------------------- r11: incremental fold
 
 
